@@ -27,7 +27,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from ..functions import caching
+from ..functions import banding, caching
 from .text import tokens
 
 
@@ -245,14 +245,11 @@ def _signatures_from_shingles(
     )
 
 
-def _banded_signatures(
-    sigs: DataFrame, num_hashes: int, bands: int, hash_fn: str
-) -> DataFrame:
-    """(_id, band, sig) — one LSH band signature row per (doc, band), the
-    join key of every banded candidate search AND the persisted manifest
-    format of the incremental near-dup path (incremental_minhash). One
-    band's signature digests its rows_per_band minhashes; a single explode
-    emits the band rows, no shuffle."""
+def _minhash_band_sigs(num_hashes: int, bands: int, hash_fn: str) -> list[Column]:
+    """Band signature expressions over the ``mh_i`` columns: band b digests
+    its rows_per_band consecutive minhashes. Shared by the batch manifest
+    and the row-wise stream form, so both reject a band count that does
+    not divide num_hashes before any job runs."""
     if bands <= 0 or num_hashes % bands != 0:
         raise ValueError(
             f"bands ({bands}) must evenly divide num_hashes ({num_hashes}); "
@@ -266,52 +263,43 @@ def _banded_signatures(
             return F.md5(F.concat_ws("|", *[c.cast("string") for c in cols]))
         return F.hash(*cols).cast("string")
 
-    band_structs = F.array(
-        *[
-            F.struct(F.lit(b).alias("band"), band_sig(b).alias("sig"))
-            for b in range(bands)
-        ]
-    )
-    return sigs.select("_id", F.explode(band_structs).alias("bs")).select(
-        "_id", "bs.band", "bs.sig"
-    )
+    return [band_sig(b) for b in range(bands)]
 
 
-def minhash_lsh_pairs(
+def _banded_signatures(
+    sigs: DataFrame, num_hashes: int, bands: int, hash_fn: str
+) -> DataFrame:
+    """(_id, band, sig) — one LSH band signature row per (doc, band), the
+    persisted manifest format of the incremental near-dup path
+    (incremental_minhash, corpus_band_manifest)."""
+    return banding.band_rows(sigs, "_id", _minhash_band_sigs(num_hashes, bands, hash_fn))
+
+
+def _minhash_pair_counts(
     df: DataFrame,
     id_col: str,
-    text_col: str = "text",
-    num_hashes: int = 16,
-    bands: int = 4,
-    n: int = 3,
-    min_jaccard: float = 0.5,
-    hash_fn: str = "md5",
+    text_col: str,
+    num_hashes: int,
+    bands: int,
+    n: int,
+    hash_fn: str,
 ) -> DataFrame:
-    """Scale-path near-dup: banded minhash candidates, verified with exact
-    Jaccard. Output (src, dst, jaccard) with jaccard >= min_jaccard.
+    """Banded minhash candidates with their exact shingle counts:
+    (src, dst, _inter, _na, _nb) — |A∩B|, |A| and |B| per candidate pair,
+    from which each caller derives its own similarity (Jaccard,
+    containment).
 
     The exploded shingle set is persisted ONCE and feeds both the signature
     aggregation and the verification join — a single explode pass. (An
     earlier variant cached the shingles but still exploded separately for
     signatures, which measured 15% slower; sharing the persisted frame for
     both consumers removes a full explode+hash pass and wins ~25% at
-    sf0.1.) The shingle cache is pinned to the result —
-    caching.release(result) after the final action."""
+    sf0.1.) The shingle cache and the band-signature cache of the
+    candidate join are pinned to the result."""
+    band_sigs = _minhash_band_sigs(num_hashes, bands, hash_fn)
     sh = exploded_shingles(df, id_col, text_col, n).persist()
-    sigs = _signatures_from_shingles(sh, num_hashes, hash_fn)
-    # The band-signature frame feeds BOTH sides of the candidate
-    # self-join; unpersisted, each side re-runs the signature aggregation
-    # (one md5 + 16 affine mins per shingle occurrence — the family's
-    # per-row hot loop) over the shingle cache. The frame is |docs| x
-    # bands rows — signature-manifest-sized at any scale — so persist it
-    # too (pinned to the result with the shingle cache).
-    exploded = _banded_signatures(sigs, num_hashes, bands, hash_fn).persist()
-    cand = (
-        exploded.alias("a")
-        .join(exploded.alias("b"), ["band", "sig"])
-        .filter(F.col("a._id") < F.col("b._id"))
-        .select(F.col("a._id").alias("src"), F.col("b._id").alias("dst"))
-        .distinct()
+    cand = banding.band_pairs(
+        _signatures_from_shingles(sh, num_hashes, hash_fn), "_id", band_sigs
     )
     # Verification is candidate-bounded by join STRATEGY, not an extra
     # semi-join pass: cand is near-dup-proportional (tiny), so AQE
@@ -329,18 +317,41 @@ def minhash_lsh_pairs(
         .groupBy("src", "dst")
         .agg(F.count("*").alias("_inter"))
     )
-    verified = (
+    counts = (
         cand.join(inter, ["src", "dst"], "left")
         .join(sizes.select(F.col("_id").alias("src"), F.col("_n").alias("_na")), "src")
         .join(sizes.select(F.col("_id").alias("dst"), F.col("_n").alias("_nb")), "dst")
-        .withColumn(
-            "jaccard",
-            F.coalesce(F.col("_inter"), F.lit(0))
-            / (F.col("_na") + F.col("_nb") - F.coalesce(F.col("_inter"), F.lit(0))),
+        .select(
+            "src", "dst", F.coalesce(F.col("_inter"), F.lit(0)).alias("_inter"),
+            "_na", "_nb",
         )
-        .filter(F.col("jaccard") >= min_jaccard)
     )
-    return caching.pin(verified.select("src", "dst", "jaccard"), sh, exploded)
+    return caching.pin(counts, sh, *caching.pinned(cand))
+
+
+def minhash_lsh_pairs(
+    df: DataFrame,
+    id_col: str,
+    text_col: str = "text",
+    num_hashes: int = 16,
+    bands: int = 4,
+    n: int = 3,
+    min_jaccard: float = 0.5,
+    hash_fn: str = "md5",
+) -> DataFrame:
+    """Scale-path near-dup: banded minhash candidates, verified with exact
+    Jaccard. Output (src, dst, jaccard) with jaccard >= min_jaccard.
+    Candidates and counts: :func:`_minhash_pair_counts`; its caches are
+    pinned to the result — caching.release(result) after the final
+    action."""
+    counts = _minhash_pair_counts(df, id_col, text_col, num_hashes, bands, n, hash_fn)
+    i = F.col("_inter")
+    verified = (
+        counts.withColumn("jaccard", i / (F.col("_na") + F.col("_nb") - i))
+        .filter(F.col("jaccard") >= min_jaccard)
+        .select("src", "dst", "jaccard")
+    )
+    return caching.pin(verified, *caching.pinned(counts))
 
 
 def _cluster_labels(
@@ -519,7 +530,8 @@ def dedup_clusters(
     a canonical representative: (id_col, cluster_rep, cluster_size), where
     cluster_rep is the minimum id reachable through the pair graph (docs
     in no pair are singletons representing themselves). Labeling strategy
-    and knobs: :func:`_cluster_labels`."""
+    and knobs: :func:`_cluster_labels`. Like every cluster consumer, the
+    result carries the caches pinned to ``pairs``."""
     labeled, n_pairs = _cluster_labels(
         df, id_col, pairs, src, dst, max_iter, local_threshold, stats
     )
@@ -530,7 +542,7 @@ def dedup_clusters(
     # task); singletons never enter the sizes join (their _rep is null
     # and would otherwise all shuffle into one null-key partition) — they
     # are definitionally size 1 and union back as a scan-side branch
-    return (
+    out = (
         matched.join(
             F.broadcast(sizes) if n_pairs <= local_threshold else sizes, "_rep"
         )
@@ -547,6 +559,7 @@ def dedup_clusters(
             )
         )
     )
+    return caching.pin(out, *caching.pinned(pairs))
 
 
 def dedup_corpus(
@@ -567,7 +580,7 @@ def dedup_corpus(
     keep = labeled.filter(
         F.col("_rep").isNull() | (F.col(id_col) == F.col("_rep"))
     ).select(id_col)
-    return df.join(keep, id_col)
+    return caching.pin(df.join(keep, id_col), *caching.pinned(pairs))
 
 
 def dedup_corpus_best(
@@ -609,7 +622,10 @@ def dedup_corpus_best(
     best = scored.groupBy("cluster_rep").agg(
         F.max_by(F.col(id_col), order).alias("_keep")
     )
-    return df.join(best.select(F.col("_keep").alias(id_col)), id_col)
+    return caching.pin(
+        df.join(best.select(F.col("_keep").alias(id_col)), id_col),
+        *caching.pinned(pairs),
+    )
 
 
 def simhash(
@@ -660,40 +676,29 @@ def simhash_dup_pairs(
     is split into max_hamming+1 bands, so a pair within max_hamming differing
     bits leaves at least one band identical (pigeonhole) — the
     (band_idx, band_value) equi-join has FULL recall, and bit_count(xor)
-    verifies the true hamming distance. One exploded self-join replaces a
-    per-band join union; the N-row sketch is persisted so the token explode
-    + bit aggregation runs once, not once per join side (cache pinned to
-    the result — caching.release(result) after the final action)."""
+    verifies the true hamming distance. One banded self-join
+    (banding.band_pairs) replaces a per-band join union; the N-row sketch
+    is persisted there so the token explode + bit aggregation runs once,
+    not once per join side (cache pinned to the result —
+    caching.release(result) after the final action)."""
     n_bands = max_hamming + 1
     band_w = max(1, bits // n_bands)
-    sk = simhash(df, id_col, text_col, bits, hash_fn).persist()
+    sk = simhash(df, id_col, text_col, bits, hash_fn)
     bands = []
     for i in range(n_bands):
         shifted = F.shiftright(F.col("simhash"), i * band_w)
         if i < n_bands - 1:
             shifted = shifted.bitwiseAND(F.lit(2**band_w - 1))
         bands.append(shifted.cast("long"))
-    keyed = sk.select(
-        F.col(id_col).alias("_id"),
-        "simhash",
-        F.posexplode(F.array(*bands)),  # -> pos (band idx), col (band value)
-    )
+    cand = banding.band_pairs(sk, id_col, bands, carry=("simhash",))
     out = (
-        keyed.alias("a")
-        .join(keyed.alias("b"), ["pos", "col"])
-        .filter(F.col("a._id") < F.col("b._id"))
-        .select(
-            F.col("a._id").alias("src"),
-            F.col("b._id").alias("dst"),
-            F.col("a.simhash").alias("sh_a"),
-            F.col("b.simhash").alias("sh_b"),
+        cand.withColumn(
+            "hamming", F.bit_count(F.col("simhash_a").bitwiseXOR(F.col("simhash_b")))
         )
-        .distinct()
-        .withColumn("hamming", F.bit_count(F.col("sh_a").bitwiseXOR(F.col("sh_b"))))
         .filter(F.col("hamming") <= max_hamming)
         .select("src", "dst", "hamming")
     )
-    return caching.pin(out, sk)
+    return caching.pin(out, *caching.pinned(cand))
 
 
 def auto_simhash_bits(
@@ -803,33 +808,26 @@ def simhash_dup_pairs_auto(
             "bands (need at least 1 bit per band)"
         )
     bits = (bits // n_bands) * n_bands
-    sk = simhash_bands(df, id_col, text_col, bits, n_bands).persist()
-    keyed = sk.select(
-        F.col(id_col).alias("_id"), "bands", F.posexplode("bands")
+    sk = simhash_bands(df, id_col, text_col, bits, n_bands)
+    cand = banding.band_pairs(
+        sk, id_col, [F.col("bands")[i] for i in range(n_bands)], carry=("bands",)
     )
-    out = (
-        keyed.alias("a")
-        .join(keyed.alias("b"), ["pos", "col"])
-        .filter(F.col("a._id") < F.col("b._id"))
-        .select(
-            F.col("a._id").alias("src"),
-            F.col("b._id").alias("dst"),
-            F.aggregate(
-                F.zip_with(
-                    F.col("a.bands"),
-                    F.col("b.bands"),
-                    lambda x, y: F.bit_count(x.bitwiseXOR(y)).cast("long"),
-                ),
-                F.lit(0).cast("long"),
-                lambda acc, x: acc + x,
-            )
-            .cast("int")
-            .alias("hamming"),
+    out = cand.select(
+        "src",
+        "dst",
+        F.aggregate(
+            F.zip_with(
+                F.col("bands_a"),
+                F.col("bands_b"),
+                lambda x, y: F.bit_count(x.bitwiseXOR(y)).cast("long"),
+            ),
+            F.lit(0).cast("long"),
+            lambda acc, x: acc + x,
         )
-        .distinct()
-        .filter(F.col("hamming") <= F.lit(max_hamming))
-    )
-    return caching.pin(out, sk)
+        .cast("int")
+        .alias("hamming"),
+    ).filter(F.col("hamming") <= F.lit(max_hamming))
+    return caching.pin(out, *caching.pinned(cand))
 
 
 def rowwise_minhash_bands(
@@ -853,8 +851,9 @@ def rowwise_minhash_bands(
     ``sh`` column (needed when the band rows feed an exact-Jaccard
     verification, e.g. streaming.stream_near_dup_verified — a later join
     back to the source would be a stream-stream join, so the array must
-    ride along)."""
-    rows_per_band = num_hashes // bands
+    ride along). A band count that does not divide num_hashes raises
+    before any job runs, as in the batch path."""
+    band_sigs = _minhash_band_sigs(num_hashes, bands, "md5")
     sh = shingles(F.col(text_col), n)
     consts = minhash_affine_constants(num_hashes)
     # one md5+conv per shingle occurrence, projected as its own column so
@@ -885,17 +884,9 @@ def rowwise_minhash_bands(
     sigs = base.select(F.col(id_col), *mins, *carried).filter(
         F.col("mh_0").isNotNull()
     )
-
-    def band_sig(bi: int) -> Column:
-        cols = [F.col(f"mh_{bi * rows_per_band + r}") for r in range(rows_per_band)]
-        return F.md5(F.concat_ws("|", *[c.cast("string") for c in cols]))
-
-    band_structs = F.array(
-        *[F.struct(F.lit(bi).alias("band"), band_sig(bi).alias("sig")) for bi in range(bands)]
+    return banding.band_rows(sigs, id_col, band_sigs, carried).select(
+        F.col("_id").alias(id_col), "band", "sig", *carried
     )
-    return sigs.select(
-        F.col(id_col), F.explode(band_structs).alias("bs"), *carried
-    ).select(id_col, "bs.band", "bs.sig", *carried)
 
 
 def corpus_band_manifest(
@@ -1401,7 +1392,7 @@ def dedup_stats(
         F.coalesce(F.col("_rep"), F.col(id_col)).alias("cluster_rep")
     )
     sizes = clusters.groupBy("cluster_rep").agg(F.count("*").alias("cluster_size"))
-    return (
+    out = (
         sizes.groupBy("cluster_size")
         .agg(
             F.count("*").alias("n_clusters"),
@@ -1409,6 +1400,7 @@ def dedup_stats(
         )
         .select("cluster_size", "n_clusters", "n_docs")
     )
+    return caching.pin(out, *caching.pinned(pairs))
 
 
 def source_similarity(
@@ -1575,38 +1567,12 @@ def containment_pairs(
     "same doc" (both high) from "contained doc" (containment high,
     jaccard low).
     """
-    sh = exploded_shingles(df, id_col, text_col, n).persist()
-    sigs = _signatures_from_shingles(sh, num_hashes, hash_fn)
-    # The band-signature frame feeds BOTH sides of the candidate
-    # self-join; unpersisted, each side re-runs the signature aggregation
-    # (one md5 + 16 affine mins per shingle occurrence — the family's
-    # per-row hot loop) over the shingle cache. The frame is |docs| x
-    # bands rows — signature-manifest-sized at any scale — so persist it
-    # too (pinned to the result with the shingle cache).
-    exploded = _banded_signatures(sigs, num_hashes, bands, hash_fn).persist()
-    cand = (
-        exploded.alias("a")
-        .join(exploded.alias("b"), ["band", "sig"])
-        .filter(F.col("a._id") < F.col("b._id"))
-        .select(F.col("a._id").alias("src"), F.col("b._id").alias("dst"))
-        .distinct()
-    )
-    sizes = sh.groupBy("_id").agg(F.count("*").alias("_n"))
-    inter = (
-        cand.join(sh.select(F.col("_id").alias("src"), "sh"), "src")
-        .join(sh.select(F.col("_id").alias("dst"), "sh"), ["dst", "sh"])
-        .groupBy("src", "dst")
-        .agg(F.count("*").alias("_inter"))
-    )
-    i = F.coalesce(F.col("_inter"), F.lit(0))
+    counts = _minhash_pair_counts(df, id_col, text_col, num_hashes, bands, n, hash_fn)
+    i, na, nb = F.col("_inter"), F.col("_na"), F.col("_nb")
     verified = (
-        cand.join(inter, ["src", "dst"], "left")
-        .join(sizes.select(F.col("_id").alias("src"), F.col("_n").alias("_na")), "src")
-        .join(sizes.select(F.col("_id").alias("dst"), F.col("_n").alias("_nb")), "dst")
-        .withColumn("containment", i / F.least(F.col("_na"), F.col("_nb")))
-        .withColumn("jaccard", i / (F.col("_na") + F.col("_nb") - i))
+        counts.withColumn("containment", i / F.least(na, nb))
+        .withColumn("jaccard", i / (na + nb - i))
         .filter(F.col("containment") >= min_containment)
+        .select("src", "dst", "containment", "jaccard")
     )
-    return caching.pin(
-        verified.select("src", "dst", "containment", "jaccard"), sh, exploded
-    )
+    return caching.pin(verified, *caching.pinned(counts))

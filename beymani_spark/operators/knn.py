@@ -265,6 +265,7 @@ def lsh_pair_distances(
     A fixed-N deployment can precompute the same formula and pass the int."""
     import random
 
+    from ..functions.banding import one_bit_probes
     from .similarity import add_lsh_bucket
 
     if n_planes == "auto":
@@ -287,8 +288,10 @@ def lsh_pair_distances(
         return pair_distances(bucketed, id_col, vec_col, [*keys, "_bucket"]).drop("_bucket")
     vec_d = F.transform(F.col(vec_col), lambda x: x.cast("double"))
     a = (
-        add_lsh_bucket(df, vec_col, planes, out_col="_probes", hamming=1)
-        .withColumn("_bucket", F.explode("_probes"))
+        add_lsh_bucket(df, vec_col, planes, out_col="_sig")
+        .withColumn(
+            "_bucket", F.explode(F.array(*one_bit_probes(F.col("_sig"), n_planes)))
+        )
         .select(*keys, F.col(id_col).alias("src"), vec_d.alias("_va"), "_bucket")
     )
     b = add_lsh_bucket(df, vec_col, planes).select(

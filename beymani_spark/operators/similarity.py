@@ -12,6 +12,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..functions.banding import one_bit_probes
+
 
 def _dot(a: Column, b: Column) -> Column:
     return F.aggregate(
@@ -28,26 +30,17 @@ def add_lsh_bucket(
     vec_col: str,
     planes: list[list[float]],
     out_col: str = "_bucket",
-    hamming: int = 0,
 ) -> DataFrame:
     """Random-hyperplane signature as a numpy mapInPandas matmul: one
     (batch x dim) @ (dim x planes) product per Arrow batch instead of
     n_planes interpreted zip_with/aggregate folds per row (BASELINE.md
-    measured the fold path ~6x slower).
-
-    ``hamming=0``: output = input + bit-string ``out_col``.
-    ``hamming=1``: ``out_col`` is instead an array of the signature plus its
-    n_planes one-bit flips — the multi-probe set. Explode it on the smaller
-    side of a bucket join to pair every row whose true signatures differ by
-    at most one bit (each qualifying pair matches exactly one probe, so the
-    join stays duplicate-free)."""
-    import numpy as np
-    from pyspark.sql.types import ArrayType, StringType, StructType
+    measured the fold path ~6x slower). Output = input + bit-string
+    ``out_col``; the multi-probe set of a signature is
+    banding.one_bit_probes."""
+    from pyspark.sql.types import StringType, StructType
 
     p_t = [list(col) for col in zip(*planes)]  # (dim, n_planes)
-    n_planes = len(planes)
-    typ = StringType() if hamming == 0 else ArrayType(StringType())
-    schema = StructType(list(df.schema.fields)).add(out_col, typ)
+    schema = StructType(list(df.schema.fields)).add(out_col, StringType())
 
     def gen(batches):
         import numpy as np  # re-import for the serialized closure
@@ -61,15 +54,7 @@ def add_lsh_bucket(
                 return out
             v = np.stack([np.asarray(x, dtype=np.float64) for x in pdf[vec_col]])
             bits = np.where(v @ p >= 0, "1", "0")
-            sigs = ["".join(r) for r in bits]
-            if hamming == 0:
-                out[out_col] = sigs
-            else:
-                out[out_col] = [
-                    [s] + [s[:i] + ("0" if s[i] == "1" else "1") + s[i + 1 :]
-                           for i in range(n_planes)]
-                    for s in sigs
-                ]
+            out[out_col] = ["".join(r) for r in bits]
             return out
 
         for pdf in batches:
@@ -266,8 +251,10 @@ def cosine_dup_pairs_lsh(
         hash_col = "_cvec"
 
     a = (
-        add_lsh_bucket(hashed, hash_col, planes, out_col="_probes", hamming=1)
-        .withColumn("_bucket", F.explode("_probes"))
+        add_lsh_bucket(hashed, hash_col, planes, out_col="_sig")
+        .withColumn(
+            "_bucket", F.explode(F.array(*one_bit_probes(F.col("_sig"), n_planes)))
+        )
         .select(
             F.col("_id").alias("src"),
             F.col("_vec").alias("_va"),
@@ -356,37 +343,18 @@ def ann_lsh_topk(
     )
     q = add_lsh_bucket(with_norm(query_df, vec_col), vec_col, planes, out_col="_sig")
     if L == 1:
-        if probe:
-            # signature plus its P one-bit flips (historical multi-probe)
-            flips = [
-                F.concat(
-                    F.substring("_sig", 1, i),
-                    F.when(F.substring("_sig", i + 1, 1) == "1", "0").otherwise("1"),
-                    F.substring("_sig", i + 2, P - i - 1),
-                )
-                for i in range(P)
-            ]
-            q = q.withColumn("_bucket", F.explode(F.array(F.col("_sig"), *flips)))
-        else:
-            q = q.withColumn("_bucket", F.col("_sig"))
+        probes = one_bit_probes(F.col("_sig"), P) if probe else []
     else:
-        probes = []
-        for t, b in enumerate(table_buckets(F.col("_sig"))):
-            probes.append(b)
-            if probe:
-                # flip within the table's own bits (positions after "t:")
-                pre = len(f"{t}:")
-                for i in range(P):
-                    probes.append(
-                        F.concat(
-                            F.substring(b, 1, pre + i),
-                            F.when(
-                                F.substring(b, pre + i + 1, 1) == "1", "0"
-                            ).otherwise("1"),
-                            F.substring(b, pre + i + 2, P - i - 1),
-                        )
-                    )
+        # each table flips only its own bits (positions after "t:")
+        probes = [
+            p
+            for t, b in enumerate(table_buckets(F.col("_sig")))
+            for p in (one_bit_probes(b, P, len(f"{t}:")) if probe else [b])
+        ]
+    if probes:
         q = q.withColumn("_bucket", F.explode(F.array(*probes)))
+    else:
+        q = q.withColumn("_bucket", F.col("_sig"))
     q = q.select(
         F.col(id_col).alias("query_id"),
         F.col("_vec").alias("_vq"),

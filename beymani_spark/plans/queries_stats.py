@@ -17,10 +17,11 @@ R = 6  # rounding digits for float parity with the oracle
 
 
 def _round(df: DataFrame, cols: list[str]) -> DataFrame:
+    """Round ``cols`` to R digits, keeping the caches pinned to ``df``."""
     out = df
     for c in cols:
         out = out.withColumn(c, F.round(F.col(c).cast("double"), R))
-    return out
+    return caching.pin(out, *caching.pinned(df))
 
 
 # ---------------------------------------------------------------- builders
@@ -434,10 +435,7 @@ def q_threshold_learner(spark: SparkSession, sf_dir: str) -> DataFrame:
     out = post.threshold_learner(
         scored, ["event_type"], "cls", _THRESHOLD_LEARNER_SPLITS
     )
-    # carry the operator's pinned count cache through the rounding select
-    return caching.pin(
-        _round(out, ["split", "weighted_impurity"]), *caching.pinned(out)
-    )
+    return _round(out, ["split", "weighted_impurity"])
 
 
 # ---------------------------------------------------------------- temporal
@@ -686,11 +684,7 @@ def q_numeric_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     out = profile.numeric_profile(
         li, ["l_quantity", "l_extendedprice", "l_discount", "l_tax"]
     )
-    # _round rebuilds the frame — carry the prefix engine's ranged pin
-    return caching.pin(
-        _round(out, ["mean", "std", "min", "q25", "q50", "q75", "max"]),
-        *caching.pinned(out),
-    )
+    return _round(out, ["mean", "std", "min", "q25", "q50", "q75", "max"])
 
 
 def _npd_side_sql(c: str, side: str, suffix: str) -> str:
@@ -740,12 +734,8 @@ def q_numeric_profile_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     a = li.filter(F.col("l_orderkey") % 2 == 0)
     b = li.filter(F.col("l_orderkey") % 2 != 0)
     out = profile.numeric_profile_drift(a, b, ["l_extendedprice", "l_discount"])
-    # _round rebuilds the frame — carry the joint CDF's ranged pin
-    return caching.pin(
-        _round(
-            out, ["mean_a", "mean_b", "std_a", "std_b", "median_a", "median_b"]
-        ),
-        *caching.pinned(out),
+    return _round(
+        out, ["mean_a", "mean_b", "std_a", "std_b", "median_a", "median_b"]
     )
 
 

@@ -466,7 +466,10 @@ def q_dedup_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
         docs, "doc_id", num_hashes=16, bands=4, n=3, min_jaccard=0.5, hash_fn="md5"
     )
     out = dedup.dedup_corpus(docs, "doc_id", pairs)
-    return out.select("doc_id", F.md5("text").alias("content_hash"))
+    return caching.pin(
+        out.select("doc_id", F.md5("text").alias("content_hash")),
+        *caching.pinned(out),
+    )
 
 
 def _simhash_bit_sql(b: int) -> str:
@@ -770,10 +773,7 @@ def q_embedding_dup_clusters_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     pairs = similarity.cosine_dup_pairs_lsh(
         emb, "vec_id", "embedding", threshold=0.4, n_planes="auto"
     )
-    out = dedup_mod.dedup_clusters(emb, "vec_id", pairs)
-    # dedup_clusters returns a new DataFrame — carry the pinned
-    # embeddings+norm cache over so release() on the result unpersists it
-    return caching.pin(out, *caching.pinned(pairs))
+    return dedup_mod.dedup_clusters(emb, "vec_id", pairs)
 
 
 def _ann_lsh_oracle() -> str:
@@ -3056,8 +3056,7 @@ def q_dedup_corpus_best(spark: SparkSession, sf_dir: str) -> DataFrame:
     out = kept.select(
         "doc_id", F.col("_q").alias("quality"), F.md5("text").alias("content_hash")
     )
-    # carry the minhash shingle pin so release() on the result unpersists it
-    return caching.pin(out, *caching.pinned(pairs))
+    return caching.pin(out, *caching.pinned(kept))
 
 
 from .model_oracles import compression_ratio_oracle as _compression_ratio_oracle  # noqa: E402

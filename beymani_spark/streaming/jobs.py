@@ -1466,66 +1466,48 @@ def stream_media_phash_dedup(
     no state (the stateless-join class). Batch==stream parity holds
     per-row because both sides run the identical kernel and band math
     (parity-tested)."""
-    from ..operators.multimodal import phash64
-
-    if composite_bands == "auto":
-        composite_bands = max_hamming <= 2
-    if composite_bands:
-        if not (0 <= max_hamming <= 2):
-            raise ValueError(
-                "composite 2-of-4 banding guarantees recall only for"
-                " max_hamming <= 2"
-            )
-    elif not (0 <= max_hamming <= 3):
-        raise ValueError(
-            "banded 4x16 phash guarantees recall only for max_hamming <= 3"
-        )
-    from ..operators.multimodal import phash_band_sigs, phash_hamming
-
-    hashed = phash64(stream_df, id_col, payload_col, decode)
-    sigs = phash_band_sigs("phash", composite_bands)
-    s_bands = hashed.select(
-        F.col(id_col),
-        F.col("phash").alias("_hs"),
-        F.posexplode(F.array(*sigs)).alias("band", "sig"),
+    from ..functions.banding import band_rows
+    from ..operators.multimodal import (
+        phash64,
+        phash_band_sigs,
+        phash_composite_banding,
+        phash_hamming,
     )
+
+    composite_bands = phash_composite_banding(max_hamming, composite_bands)
+    sigs = phash_band_sigs("phash", composite_bands)
+
+    def bands(hashes: DataFrame, key: str, hash_alias: str) -> DataFrame:
+        return band_rows(hashes, key, sigs, carry=("phash",)).select(
+            F.col("_id").alias(key), F.col("phash").alias(hash_alias), "band", "sig"
+        )
+
+    s_bands = bands(phash64(stream_df, id_col, payload_col, decode), id_col, "_hs")
     # the batch pair engine's 16-hex length contract, mirrored on the
     # caller-provided corpus side (stream hashes come from phash64 and
     # are 16 hex by construction): a malformed corpus hash must not
     # bucket under shared '' keys or silently drop as a NULL hamming
-    c_bands = corpus_hashes.filter(F.length(F.col("phash")) == 16).select(
-        F.col(corpus_id_col),
-        F.col("phash").alias("_hc"),
-        F.posexplode(F.array(*sigs)).alias("band", "sig"),
+    c_bands = bands(
+        corpus_hashes.filter(F.length(F.col("phash")) == 16), corpus_id_col, "_hc"
     )
     # STATELESS pair dedup: a pair colliding in several bands emits several
     # join rows, but all duplicates live inside the SAME micro-batch (they
     # derive from one arriving row), so global dropDuplicates state —
     # unbounded, one entry per pair ever seen, and wrongly suppressing a
     # legitimately re-sent item — is pure liability. Keep only the row
-    # whose band is the FIRST matching band, a row-local predicate on the
-    # two hashes both sides already carry.
-    if composite_bands:
-        import itertools
-
-        band_eqs = [
-            (F.substring("_hs", 1 + 4 * i, 4) == F.substring("_hc", 1 + 4 * i, 4))
-            & (F.substring("_hs", 1 + 4 * j, 4) == F.substring("_hc", 1 + 4 * j, 4))
-            for i, j in itertools.combinations(range(4), 2)
+    # whose band is the FIRST (lowest-index) matching band, a row-local
+    # predicate on the two hashes both sides already carry.
+    first_match = F.coalesce(
+        *[
+            F.when(x == y, F.lit(b))
+            for b, (x, y) in enumerate(
+                zip(
+                    phash_band_sigs("_hs", composite_bands),
+                    phash_band_sigs("_hc", composite_bands),
+                )
+            )
         ]
-    else:
-        band_eqs = [
-            F.substring("_hs", 1 + 4 * b, 4) == F.substring("_hc", 1 + 4 * b, 4)
-            for b in range(4)
-        ]
-    first_match = None
-    for b in range(len(band_eqs) - 1, -1, -1):
-        first_match = (
-            F.when(band_eqs[b], F.lit(b))
-            if first_match is None
-            else F.when(band_eqs[b], F.lit(b)).otherwise(first_match)
-        )
-    # reversed build order makes band 0 the outermost WHEN: lowest index wins
+    )
     cand = (
         s_bands.join(c_bands, ["band", "sig"])
         .filter(F.col(id_col) != F.col(corpus_id_col))

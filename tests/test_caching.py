@@ -1,6 +1,8 @@
 """Caller-owned cache lifetime: pin/release on lazily-returned operators."""
 from __future__ import annotations
 
+import pytest
+
 from beymani_spark.functions import caching
 from beymani_spark.operators import dedup, text
 from beymani_spark.sources import load_table
@@ -157,3 +159,42 @@ def test_bm25_topk_pins_tf_cache_and_hybrid_propagates(spark):
     caching.release(hyb, blocking=True)
     cm = spark._jsparkSession.sharedState().cacheManager()
     assert cm.isEmpty(), "release leaked a cache"
+
+
+# Registry queries of the banded near-duplicate family, plus the cluster
+# consumers and rounded builders that wrap its pair engines.
+_FAMILY_QUERIES = [
+    "dedup_minhash_lsh",
+    "dedup_clusters",
+    "dedup_stats",
+    "dedup_corpus",
+    "dedup_corpus_best",
+    "dedup_containment",
+    "dedup_minhash_incremental",
+    "dedup_jaccard",
+    "dedup_simhash",
+    "dedup_simhash_auto",
+    "media_phash_dup_pairs",
+    "audio_dup_pairs",
+    "video_phash_dup_pairs",
+    "cosine_dup_pairs",
+    "embedding_dup_clusters",
+    "embedding_dup_clusters_lsh",
+    "lof_lsh",
+]
+
+
+@pytest.mark.parametrize("name", _FAMILY_QUERIES)
+def test_family_query_release_leaves_no_cache(spark, sf_dir, name):
+    """Cache census: after one action, releasing a registry result must
+    empty the session's CacheManager — every cache the builder persisted
+    must still be pinned to the frame it returns, through every wrapping
+    step (rounding, cluster labelling, projections)."""
+    from beymani_spark.plans import QUERIES
+
+    spark.catalog.clearCache()
+    cm = spark._jsparkSession.sharedState().cacheManager()
+    df = QUERIES[name].builder(spark, sf_dir)
+    df.count()
+    caching.release(df, blocking=True)
+    assert cm.isEmpty(), f"{name}: a cache outlived caching.release"

@@ -1141,6 +1141,24 @@ def test_stream_media_phash_dedup_matches_batch(spark, stream_dirs):
     assert planted <= set(got) and all(got[p] == 0 for p in planted)
 
 
+def test_rowwise_minhash_bands_rejects_uneven_bands_before_any_job(spark):
+    """bands must divide num_hashes: the stream form shares the batch
+    check (a remainder would drop mh_15 from every signature at bands=3)
+    and raises on the driver before any Spark job runs."""
+    from beymani_spark.operators import dedup
+
+    sc = spark.sparkContext
+    docs = spark.createDataFrame([(1, "a b c d")], "doc_id long, text string")
+    group = "rowwise-minhash-bands-check"
+    sc.setJobGroup(group, group)
+    try:
+        with pytest.raises(ValueError, match="evenly divide"):
+            dedup.rowwise_minhash_bands(docs, "doc_id", "text", num_hashes=16, bands=3)
+        assert not sc.statusTracker().getJobIdsForGroup(group)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+
+
 def test_stream_media_phash_dedup_composite_matches_batch(spark, stream_dirs):
     """Composite-band streaming pHash dedup: the corpus-scale form's
     verified pair set equals the single-band form restricted to
